@@ -84,10 +84,6 @@ object Bench {
       // A/B kill-switch for the dense-table scan widen (Tables.widen)
       .config("graft.wideScans",
         sys.env.getOrElse("SPARK_GRAFT_WIDE_SCANS", "true"))
-      // A/B knob for the widen size floor (round-14 floor experiment)
-      .config("graft.widenMinBytes",
-        sys.env.getOrElse("SPARK_GRAFT_WIDEN_MIN_BYTES",
-          (4L << 20).toString))
       .config("spark.ui.enabled", "false")
       // The interleaved-sweep protocol visits all 244 queries between
       // any query's consecutive reps, and Spark's generated-class cache

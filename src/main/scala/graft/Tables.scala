@@ -37,17 +37,6 @@ object Tables {
     * so a pre-shuffle of raw bytes would cost more than it saves. */
   private val CpuDenseTables = Set("documents", "embeddings")
 
-  /** Minimum compressed input size before a widen is considered: below
-    * this the serial scan is cheap and the extra exchange is pure
-    * overhead. Configurable (`graft.widenMinBytes`) since round 14 so
-    * the threshold is an A/B-able deployment knob rather than a burned
-    * constant — the round-14 floor experiment measured the CPU-dense
-    * single-task stages (d04's per-shingle md5 fingerprint, the c03/c04
-    * rolling-hash and bloom probes, sk01–05's token passes) against the
-    * added exchange cost per query and set the default accordingly. */
-  private def widenMinBytes(spark: SparkSession): Long =
-    spark.conf.get("graft.widenMinBytes", (4L << 20).toString).toLong
-
   /** The d12 lesson generalized (round 13): these corpora are written
     * as a SINGLE parquet row group (measured: documents at sf2 = one
     * 12 MB row group), which no `maxPartitionBytes` setting can split —
@@ -78,7 +67,15 @@ object Tables {
     * the session's parallelism is untouched, so the 100 TB
     * thousands-of-splits case never pays the exchange. */
   def widenDense(df: DataFrame): DataFrame =
-    widenDense(df, widenMinBytes(df.sparkSession))
+    widenDense(df, DefaultWidenMinBytes)
+
+  /** Minimum compressed input size before a widen is considered: below
+    * this the serial scan is cheap and the extra exchange is pure
+    * overhead. The round-14 floor experiment measured the CPU-dense
+    * single-task stages (d04's per-shingle md5 fingerprint, the c03/c04
+    * rolling-hash and bloom probes, sk01–05's token passes) against the
+    * added exchange cost per query and set this default. */
+  val DefaultWidenMinBytes: Long = 4L << 20
 
   /** Operator-level floor for inputs whose per-ROW map work is provably
     * heavy — k md5 probes per 4-gram (c04/c05's Bloom pass), a rolling

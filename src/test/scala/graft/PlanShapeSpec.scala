@@ -277,18 +277,48 @@ class PlanShapeSpec extends SparkSpec {
     * OPTIMIZED plans themselves — across the entire registered query
     * surface, every Window with an empty partitionSpec must sit over a
     * subtree containing an Aggregate (i.e. a provably small, already-
-    * aggregated relation), never over raw rows. */
+    * aggregated relation), never over raw rows. The CDC-replay queries
+    * (etl_*, ref_*) throw where their corpus directory is absent, so
+    * their plans are built here over an empty scan: the replay bodies
+    * themselves, and the reference SQL over `tracking`/`events` views of
+    * those bodies. */
   test("optimized-plan gate: no unpartitioned Window over a non-aggregated child") {
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LogicalWindow}
+    import graft.etl.Pipelines
+    import graft.operators.ReferenceQueries
     val dir = sf("sf0.001")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+    val clock = Some(java.sql.Timestamp.valueOf("2023-09-05 00:00:00"))
+    val tracking = Pipelines.tracking(spark, Seq.empty, clock = clock)
+    val events = Pipelines.events(spark, Seq.empty, clock = clock)
+    // (re)bind the views per plan, as ReferenceQueries does: other query
+    // packs bind an `events` view of their own
+    def overViews(sql: String): () => DataFrame = () => {
+      tracking.createOrReplaceTempView("tracking")
+      events.createOrReplaceTempView("events")
+      spark.sql(sql)
+    }
+    val replayPlans: Map[String, () => DataFrame] = Map(
+      "etl_tracking_replay" -> (() => tracking),
+      "etl_events_replay" -> (() => events),
+      // the staged query scans a parquet copy of this same body
+      "etl_events_replay_staged" -> (() => events),
+      "ref_q1_trackings_per_minute" -> overViews(ReferenceQueries.q1Sql),
+      "ref_q2_events_per_code" -> overViews(ReferenceQueries.q2Sql),
+      "ref_q2_deterministic" -> overViews(ReferenceQueries.q2DeterministicSql),
+      "ref_q3_top_descriptions" -> overViews(ReferenceQueries.q3Sql))
+    assert(replayPlans.keySet === SparkEntry.queries.keySet.filter(n =>
+      n.startsWith("etl_") || n.startsWith("ref_")))
+    val offenders = try SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        val plan = fn(spark, dir).queryExecution.optimizedPlan
-        plan.collect {
+        val df = replayPlans.get(name).fold(fn(spark, dir))(_())
+        df.queryExecution.optimizedPlan.collect {
           case w: LogicalWindow if w.partitionSpec.isEmpty &&
               w.child.collectFirst { case a: Aggregate => a }.isEmpty =>
             s"$name: ${w.windowExpressions.map(_.name).mkString(",")}"
         }
+    } finally {
+      spark.catalog.dropTempView("tracking")
+      spark.catalog.dropTempView("events")
     }
     assert(offenders.isEmpty,
       s"unpartitioned Window over non-aggregated input in optimized plans:\n" +
